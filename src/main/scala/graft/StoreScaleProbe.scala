@@ -177,7 +177,7 @@ object StoreScaleProbe {
         .distinct()
       graph.GraphAlgs
         .pairComponents(pairs, streaming.EventStreams.StoreComponentsRounds)
-        .groupBy("comp").agg(count(lit(1)).as("size"))
+        .state.groupBy("comp").agg(count(lit(1)).as("size"))
         .groupBy("size").agg(count(lit(1)).as("n_components"))
         .orderBy("size").collect()
     }

@@ -632,12 +632,12 @@ object Dedup {
   /** Min-label components over the MinHash-verified pair graph —
     * memoized: the cluster consumers (minhashClusters, qualityKeepers,
     * Curation.safeSplits) each paid the checkpoint-backed propagation
-    * rounds otherwise. The relation is (id, comp) for every doc on a
+    * rounds otherwise. Its `state` is (id, comp) for every doc on a
     * verified pair; pairComponents already checkpoints its state, so
     * the memo only dedups the ROUNDS across consumers. */
   private[graft] def minhashComponents(spark: SparkSession, dir: String,
-                                       threshold: Double = 0.8,
-                                       rounds: Int = ClusterRounds): DataFrame =
+      threshold: Double = 0.8,
+      rounds: Int = ClusterRounds): graft.graph.Superstep.Result =
     graft.Memo.get(spark, "dedup-minhash-comp", (dir, threshold, rounds)) {
       graft.graph.GraphAlgs.pairComponents(
         minhashPairsUnsorted(spark, dir, threshold).select("d1", "d2"),
@@ -655,15 +655,12 @@ object Dedup {
   private[graft] def minhashConvergedWithin(spark: SparkSession,
       dir: String, threshold: Double = 0.8,
       rounds: Int = ClusterRounds): Boolean =
-    graft.graph.GraphAlgs.pairComponentsConvergedWithin(spark,
-      ("minhash", dir, threshold, rounds),
-      minhashPairsUnsorted(spark, dir, threshold).select("d1", "d2"),
-      minhashComponents(spark, dir, threshold, rounds))
+    minhashComponents(spark, dir, threshold, rounds).converged
 
   def minhashClusters(spark: SparkSession, dir: String,
                       threshold: Double = 0.8,
                       rounds: Int = ClusterRounds): DataFrame =
-    minhashComponents(spark, dir, threshold, rounds)
+    minhashComponents(spark, dir, threshold, rounds).state
       .groupBy("comp").agg(count(lit(1)).as("n_members"))
       .filter(col("n_members") > 1)
       .select(col("comp").as("keep_doc_id"), col("n_members"))
@@ -683,7 +680,7 @@ object Dedup {
   def qualityKeepers(spark: SparkSession, dir: String,
                      threshold: Double = 0.8,
                      rounds: Int = 5): DataFrame = {
-    val members = minhashComponents(spark, dir, threshold, rounds)
+    val members = minhashComponents(spark, dir, threshold, rounds).state
     val q6 = graft.pipeline.Curation.qualityMicro(spark, dir)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("comp")
       .orderBy(desc("q6"), asc("id"))

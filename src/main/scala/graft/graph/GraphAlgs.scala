@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -207,7 +207,7 @@ object GraphAlgs {
     * min-label round fold least(own, min(nbrs)) in ONE keyed
     * aggregation with the label state referenced ONCE — a round that
     * also left-joins the previous state would execute a not-yet-
-    * materialized lazy checkpoint twice ([[graft.Layout.roundCheckpoint]]).
+    * materialized lazy checkpoint twice ([[Superstep.run]]).
     * Isolated nodes surface through their self row (the old
     * formulation's left join carried them). */
   private def undirectedEdges(spark: SparkSession, dir: String,
@@ -377,13 +377,13 @@ object GraphAlgs {
     * 10-round fixed point on this graph — the fixed-round loop
     * early-exits at its monotone fixed point). That equivalence is
     * DATA-dependent, so the query asserts it
-    * ([[componentsConvergedWithin]]) instead of assuming it: on a graph
+    * ([[componentLabels]]' `converged`) instead of assuming it: on a graph
     * whose propagation needs more than [[ComponentsOracleRounds]] rounds
     * this fails loudly with the horizon named, rather than surfacing as
     * an unexplained oracle hash mismatch. */
   def connectedComponentSizes(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    require(componentsConvergedWithin(spark, dir, ComponentsOracleRounds),
+    require(componentLabels(spark, dir, ComponentsOracleRounds).converged,
       s"graphx_components oracle horizon: min-label propagation did not " +
         s"converge within $ComponentsOracleRounds rounds on this graph; " +
         "the full-convergence GraphX histogram may legitimately differ " +
@@ -664,7 +664,7 @@ object GraphAlgs {
   def kCoreSummary(spark: SparkSession, dir: String,
                    k: Int = KCoreK, rounds: Int = KCoreRounds): DataFrame = {
     val pairs = coPurchasePairs(spark, dir)
-    val alive = kCoreAlive(spark, dir, k, rounds)
+    val alive = kCoreAlive(spark, dir, k, rounds).state
     val coreEdges = pairs
       .join(alive.withColumnRenamed("p", "p1"), "p1")
       .join(alive.withColumnRenamed("p", "p2"), "p2")
@@ -675,38 +675,28 @@ object GraphAlgs {
   }
 
   /** The round-`rounds` survivor set of the peel loop — memoized so the
-    * summary row and the convergence audit ([[kCoreConvergedWithin]])
-    * pay one peeling between them per session. */
+    * summary row and the convergence audit (`converged`: one more peel
+    * drops nobody; the DuckDB twin in the `convergence_audit` row
+    * unrolls rounds+1 and compares the same counts) pay one peeling
+    * between them per session. */
   private[graft] def kCoreAlive(spark: SparkSession, dir: String,
-                                k: Int, rounds: Int): DataFrame =
+                                k: Int, rounds: Int): Superstep.Result =
     graft.Memo.get(spark, "kcore-alive", (dir, k, rounds)) {
-      val pairs = coPurchasePairs(spark, dir)
-      var alive = coPurchaseDegrees(spark, dir).select("p")
-        .localCheckpoint(true)
-      // One job per round (r16, §2.6 fewer sync points): the checkpoint
-      // is lazy — the convergence count is the job that materializes it
-      // — and the previous round's count carries forward instead of
-      // re-counting the cached frame. Survivor sets only shrink, so
-      // equal counts ⟺ identical sets (the pre-existing probe logic).
-      var nAlive = -1L
-      var r = 0
-      var converged = false
-      while (r < rounds && !converged) {
-        r += 1
-        val next = kCorePeelStep(pairs, alive, k).localCheckpoint(false)
-        if (r < rounds) {
-          if (nAlive < 0) nAlive = alive.count()
-          val nNext = next.count()
-          converged = nNext == nAlive
-          nAlive = nNext
-        }
-        alive = next
-      }
-      alive
+      Superstep.run(kCoreLoop(spark, dir, k, coPartition = false), rounds)
     }
 
-  /** One peel round, uncheckpointed — shared verbatim by the loop and
-    * the convergence probe: restrict the static pair set to surviving
+  /** Peeling as a shrinking kernel loop. The peel step joins its survivor
+    * set where AQE chooses, never through the state gate, so production
+    * runs it with the broadcast path's lazy per-round checkpoints. */
+  private[graft] def kCoreLoop(spark: SparkSession, dir: String, k: Int,
+                               coPartition: Boolean): Superstep.Loop = {
+    val pairs = coPurchasePairs(spark, dir)
+    Superstep.Loop(coPurchaseDegrees(spark, dir).select("p")
+      .localCheckpoint(true), kCorePeelStep(pairs, _, k), coPartition,
+      Superstep.Fixpoint.Shrinking)
+  }
+
+  /** One peel round: restrict the static pair set to surviving
     * endpoints, recount degrees within the subgraph, keep ≥ k. */
   private def kCorePeelStep(pairs: DataFrame, alive: DataFrame,
                             k: Int): DataFrame = {
@@ -719,20 +709,6 @@ object GraphAlgs {
       .filter(col("d") >= k)
       .select("p")
   }
-
-  /** True iff peeling reaches its fixed point within `rounds` rounds:
-    * one more peel from the round-`rounds` survivors drops nobody.
-    * Peeling is monotone (survivors only shrink), so count equality IS
-    * set equality — no join needed. Memoized; the DuckDB twin in the
-    * `convergence_audit` row unrolls rounds+1 and compares the same
-    * counts, so the boolean is oracle-checked, not assumed. */
-  private[graft] def kCoreConvergedWithin(spark: SparkSession, dir: String,
-                                          k: Int, rounds: Int): Boolean =
-    graft.Memo.get(spark, "kcore-converged", (dir, k, rounds)) {
-      val alive = kCoreAlive(spark, dir, k, rounds)
-      kCorePeelStep(coPurchasePairs(spark, dir), alive, k).count() ==
-        alive.count()
-    }
 
   /** Association rules over baskets: confidence P(cons|ante) and lift
     * for the top-k rules by lift. Every input is an exact count —
@@ -807,32 +783,21 @@ object GraphAlgs {
     *
     * Scale shape: NO unconditional broadcast of the |V|-sized state.
     * The state-join strategy is gated on the EXACT row count of the
-    * state ([[stateCoPartitioned]]): under the gate (default 2M rows —
-    * tens of MB, safe in any executor; sf0.1's 185k vertices qualify)
-    * the state broadcasts onto the static src-partitioned edges and the
-    * round runs exchange-light, which is strictly faster on a bench-
-    * scale graph. Over the gate — 10⁹–10¹⁰ vertices is 10⁴× over it —
-    * the round switches to an exchange-free sort-merge join: rank state
-    * hash-partitioned by id (the previous round's groupBy layout,
-    * preserved through [[graft.Layout.checkpoint]]) against the
-    * partitioned + sorted edge relation ([[rankEdges]]), so the 100 TB
-    * side never moves and only the state re-sorts in partition. The
-    * gate is an exact count, not Spark's byte heuristics — an estimator
-    * cannot see through an iterative loop, which is how an auto-picked
-    * broadcast OOMs at scale; a deployment can force the co-partitioned
-    * path outright with graft.state.broadcast.maxRows=0. The one
-    * per-iteration exchange is the |E|-sized contributions fold keyed
-    * by dst — the honest shuffle every scalable PageRank pays. Per-dst
-    * collect_list is bounded by in-degree, with the fixed-fan-in fold
-    * tree as the hot-sink escape hatch. The layout checkpoint between
-    * iterations keeps the state concrete (a fully lazy chain
-    * re-executes the whole lineage per level — measured pathological)
-    * AND keeps its partitioning visible for the next round's joins.
-    * Memoized: every query on the same (dir, seeds, iters) reads one
+    * state ([[stateCoPartitioned]]): under the kernel's gate (sf0.1's
+    * 185k vertices qualify) the state broadcasts onto the static
+    * dst-partitioned edges and the round runs exchange-light, which is
+    * strictly faster on a bench-scale graph. Over it the round is an
+    * exchange-free sort-merge join against the partitioned + sorted
+    * edge relation ([[rankEdges]]), so the 100 TB side never moves
+    * ([[Superstep.joinState]]). The one per-iteration exchange is then
+    * the |E|-sized contributions fold keyed by dst — the honest shuffle
+    * every scalable PageRank pays. Per-dst collect_list is bounded by
+    * in-degree, with the fixed-fan-in fold tree as the hot-sink escape
+    * hatch. Memoized: every query on the same (dir, seeds, iters) reads one
     * propagation. Bit-parity with the oracle is layout-independent (the
     * sorted fold fixes the summation order), so BOTH join strategies
-    * hash identically — asserted by the oracle rows staying green; both
-    * plan shapes are asserted in PlanAuditSpec. */
+    * hash identically — asserted bit for bit over whole loops in
+    * SuperstepSpec; both plan shapes are asserted in PlanAuditSpec. */
   private[graft] def fixedRanks(spark: SparkSession, dir: String,
                                 seeds: Seq[Option[String]], iters: Int): DataFrame =
     graft.Memo.get(spark, "fixed-ranks", (dir, seeds, iters)) {
@@ -847,59 +812,50 @@ object GraphAlgs {
     * memoized wrapper: their seed set is a fixed constant. */
   private[graft] def fixedRanksUncached(spark: SparkSession, dir: String,
                                         seeds: Seq[Option[String]],
-                                        iters: Int): DataFrame = {
-      val coPart = stateCoPartitioned(spark, dir)
-      val e = rankEdges(spark, dir, bySrc = coPart)
-      val nodes = nodesById(spark, dir)
-      val inits = seeds.zipWithIndex.map {
-        case (None, j) => lit(1.0).as(s"r$j")
-        case (Some(s), j) =>
-          when(col("id") === s, lit(1.0)).otherwise(lit(0.0)).as(s"r$j")
-      }
-      var ranks = nodes.select(col("id") +: inits: _*)
-      for (i <- 1 to iters)
-        ranks = graft.Layout.roundCheckpoint(
-          rankStep(e, nodes, ranks, seeds, coPart), preserveLayout = coPart,
-          round = i, last = i == iters)
-      ranks
+                                        iters: Int): DataFrame =
+    Superstep.run(rankLoop(spark, dir, seeds,
+      stateCoPartitioned(spark, dir)), iters).state
+
+  /** The rank propagation as a kernel loop: one rank column per seed. */
+  private[graft] def rankLoop(spark: SparkSession, dir: String,
+                              seeds: Seq[Option[String]],
+                              coPartition: Boolean): Superstep.Loop = {
+    val e = rankEdges(spark, dir, bySrc = coPartition)
+    val nodes = nodesById(spark, dir)
+    val inits = seeds.zipWithIndex.map {
+      case (None, j) => lit(1.0).as(s"r$j")
+      case (Some(s), j) =>
+        when(col("id") === s, lit(1.0)).otherwise(lit(0.0)).as(s"r$j")
+    }
+    Superstep.Loop(nodes.select(col("id") +: inits: _*),
+      rankStep(e, nodes, _, seeds, coPartition), coPartition)
   }
 
-  /** Default gate: 2M state rows ≈ 60 MB for an id + 3 doubles — inside
-    * any executor's broadcast budget with 30× headroom against an 8 GB
-    * heap; one state broadcast is in flight at a time (freed at the next
-    * round's checkpoint). Override with
-    * spark.graft.state.broadcast.maxRows (0 forces co-partitioned rounds
-    * everywhere — what a warehouse deployment pins). */
-  private[graft] def stateBroadcastMaxRows(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.state.broadcast.maxRows")
-      .map(_.toLong).getOrElse(2000000L)
-
   /** True when per-node propagation state must co-partition (|V| over
-    * the broadcast gate). Exact count of the checkpointed node relation,
-    * memoized per dir — one cheap job, not an estimate. */
+    * the kernel's broadcast gate). Exact count of the checkpointed node
+    * relation, memoized per dir — one cheap job, not an estimate. */
   private[graft] def stateCoPartitioned(spark: SparkSession,
                                         dir: String): Boolean =
-    graft.Memo.get(spark, "n-vertices", dir) {
+    Superstep.coPartitioned(graft.Memo.get(spark, "n-vertices", dir) {
       nodesById(spark, dir).count()
-    } > stateBroadcastMaxRows(spark)
+    })
 
-  /** One propagation round, UNcheckpointed — split out so PlanAuditSpec
-    * can assert both join shapes on exactly the plan the loop executes:
-    * `coPartition = true` must show a sort-merge state join with ONE
-    * exchange (the contributions fold) and no BroadcastExchange;
-    * `coPartition = false` (small-|V| gate) broadcasts the state. */
+  /** One propagation round — the loop's step, also called directly by
+    * PlanAuditSpec to assert both join shapes on exactly the plan the
+    * loop executes: `coPartition = true` must show a sort-merge state
+    * join with ONE exchange (the contributions fold) and no
+    * BroadcastExchange; `coPartition = false` (small-|V| gate)
+    * broadcasts the state. */
   private[graft] def rankStep(e: DataFrame, nodes: DataFrame,
                               ranks: DataFrame,
                               seeds: Seq[Option[String]],
                               coPartition: Boolean): DataFrame = {
-    val state = ranks.withColumnRenamed("id", "src")
-    val contribs = e
-      .join(if (coPartition) state.hint("merge") else broadcast(state), "src")
+    val contribs = Superstep.joinState(e, ranks.withColumnRenamed("id", "src"),
+        "src", coPartition)
       .select(col("dst").as("id") +: seeds.indices.map(j =>
         (col(s"r$j") / col("outdeg")).as(s"c$j")): _*)
     val folds = seeds.indices.map(j =>
-      aggregate(sort_array(collect_list(col(s"c$j"))), lit(0.0),
-        (s, x) => s + x).as(s"in$j"))
+      Superstep.foldSum(col(s"c$j")).as(s"in$j"))
     val summed = contribs.groupBy("id").agg(folds.head, folds.tail: _*)
     val updates = seeds.zipWithIndex.map {
       case (sd, j) =>
@@ -939,28 +895,27 @@ object GraphAlgs {
     * (not 10): one extra propagation family shouldn't double the
     * bench's iterative budget, and the oracle unrolls the same 5. */
   def weightedPageRankTop(spark: SparkSession, dir: String,
-                          iters: Int = 5, k: Int = 20): DataFrame = {
-    val coPart = stateCoPartitioned(spark, dir)
-    val e = weightedRankEdges(spark, dir, bySrc = coPart)
+                          iters: Int = 5, k: Int = 20): DataFrame =
+    Superstep.run(weightedRankLoop(spark, dir,
+        stateCoPartitioned(spark, dir)), iters).state
+      .select(col("id"), col("r").as("rank"))
+      .orderBy(desc("rank"), asc("id")).limit(k)
+
+  private[graft] def weightedRankLoop(spark: SparkSession, dir: String,
+                                      coPartition: Boolean): Superstep.Loop = {
+    val e = weightedRankEdges(spark, dir, bySrc = coPartition)
     val nodes = nodesById(spark, dir)
-    var ranks = nodes.select(col("id"), lit(1.0).as("r"))
-    for (i <- 1 to iters) {
-      val state = ranks.withColumnRenamed("id", "src")
-      val contribs = e
-        .join(if (coPart) state.hint("merge") else broadcast(state), "src")
+    Superstep.Loop(nodes.select(col("id"), lit(1.0).as("r")), { ranks =>
+      val contribs = Superstep.joinState(e,
+          ranks.withColumnRenamed("id", "src"), "src", coPartition)
         .select(col("dst").as("id"),
           (col("r") * col("w_c") / col("wout_c")).as("c"))
       val summed = contribs.groupBy("id")
-        .agg(aggregate(sort_array(collect_list(col("c"))), lit(0.0),
-          (s, x) => s + x).as("inr"))
-      ranks = graft.Layout.roundCheckpoint(
-        nodes.join(summed, Seq("id"), "left")
-          .select(col("id"),
-            (lit(0.15) + lit(0.85) * coalesce(col("inr"), lit(0.0))).as("r")),
-        preserveLayout = coPart, round = i, last = i == iters)
-    }
-    ranks.select(col("id"), col("r").as("rank"))
-      .orderBy(desc("rank"), asc("id")).limit(k)
+        .agg(Superstep.foldSum(col("c")).as("inr"))
+      nodes.join(summed, Seq("id"), "left")
+        .select(col("id"),
+          (lit(0.15) + lit(0.85) * coalesce(col("inr"), lit(0.0))).as("r"))
+    }, coPartition)
   }
 
   /** Synchronous label-propagation communities (LPA) over the
@@ -977,7 +932,7 @@ object GraphAlgs {
     * a global sort). Output: community sizes, top-k deterministic. */
   def lpaCommunities(spark: SparkSession, dir: String,
                      rounds: Int = LpaRounds, k: Int = 20): DataFrame =
-    lpaLabels(spark, dir, rounds)
+    lpaLabels(spark, dir, rounds).state
       .groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_members"))
       .orderBy(desc("n_members"), asc("community")).limit(k)
@@ -989,34 +944,40 @@ object GraphAlgs {
 
   /** The (id, label) frame after `rounds` synchronous LPA votes — the
     * loop body of [[lpaCommunities]], memoized so the registry row and
-    * the convergence audit ([[lpaConvergedWithin]]) pay one propagation
+    * the convergence audit (`converged`) pay one propagation
     * between them per session. */
   private[graft] def lpaLabels(spark: SparkSession, dir: String,
-                               rounds: Int): DataFrame =
+                               rounds: Int): Superstep.Result =
     graft.Memo.get(spark, "lpa-labels", (dir, rounds)) {
-      val coPart = stateCoPartitioned(spark, dir)
-      val und = undirectedEdges(spark, dir, bySrc = coPart)
-        .filter(!col("self"))
-      val nodes = nodesById(spark, dir)
-      var labels = nodes.select(col("id"), col("id").as("label"))
-      for (i <- 1 to rounds)
-        labels = graft.Layout.roundCheckpoint(
-          lpaStep(und, nodes, labels, coPart),
-          preserveLayout = coPart, round = i, last = i == rounds)
-      labels
+      Superstep.run(lpaLoop(spark, dir, stateCoPartitioned(spark, dir)),
+        rounds)
     }
 
-  /** One synchronous LPA vote round, uncheckpointed — split out (the
-    * rankStep/pairComponentsStep convention) so the loop and the
-    * convergence probe execute the identical formula: per-dst vote
-    * count, count-desc-then-min-label argmax over ≤ degree-many rows,
-    * isolated nodes keep their own label. Same gated state-join
-    * strategy as every propagation round. */
+  /** Synchronous LPA as a kernel loop. Unlike min-label propagation LPA
+    * is NOT monotone (synchronous votes can 2-cycle on bipartite
+    * structure), so it runs every round, and whether one more vote round
+    * changes no label (`converged`) is a genuine data-dependent fact —
+    * exactly why the registry's `convergence_audit` row computes it on
+    * BOTH engines (the DuckDB twin unrolls rounds+1) instead of the code
+    * assuming it. The label diff is a gate-free keyed aggregation
+    * (union + per-id distinct-count), never a |V| broadcast. */
+  private[graft] def lpaLoop(spark: SparkSession, dir: String,
+                             coPartition: Boolean): Superstep.Loop = {
+    val und = undirectedEdges(spark, dir, bySrc = coPartition)
+      .filter(!col("self"))
+    val nodes = nodesById(spark, dir)
+    Superstep.Loop(nodes.select(col("id"), col("id").as("label")),
+      lpaStep(und, nodes, _, coPartition), coPartition,
+      Superstep.Fixpoint.SameColumn("label"))
+  }
+
+  /** One synchronous LPA vote round: per-dst vote count,
+    * count-desc-then-min-label argmax over ≤ degree-many rows, isolated
+    * nodes keep their own label. */
   private def lpaStep(und: DataFrame, nodes: DataFrame, labels: DataFrame,
                       coPart: Boolean): DataFrame = {
-    val state = labels.withColumnRenamed("id", "src")
-    val votes = und
-      .join(if (coPart) state.hint("merge") else broadcast(state), "src")
+    val votes = Superstep.joinState(und,
+        labels.withColumnRenamed("id", "src"), "src", coPart)
       .groupBy(col("dst").as("id"), col("label"))
       .agg(count(lit(1)).as("c"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("id")
@@ -1026,30 +987,6 @@ object GraphAlgs {
     nodes.join(best, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
   }
-
-  /** True iff synchronous LPA reaches its label fixed point within
-    * `rounds` rounds: one more vote round from the round-`rounds` state
-    * must change no label. Unlike min-label propagation LPA is NOT
-    * monotone (synchronous votes can 2-cycle on bipartite structure),
-    * so this is a genuine data-dependent fact, not a tautology — which
-    * is exactly why the registry's `convergence_audit` row computes it
-    * on BOTH engines (the DuckDB twin unrolls rounds+1) instead of the
-    * code assuming it. The label diff is a gate-free keyed aggregation
-    * (union + per-id distinct-count), never a |V| broadcast. */
-  private[graft] def lpaConvergedWithin(spark: SparkSession, dir: String,
-                                        rounds: Int): Boolean =
-    graft.Memo.get(spark, "lpa-converged", (dir, rounds)) {
-      val labels = lpaLabels(spark, dir, rounds)
-      val coPart = stateCoPartitioned(spark, dir)
-      val und = undirectedEdges(spark, dir, bySrc = coPart)
-        .filter(!col("self"))
-      val nodes = nodesById(spark, dir)
-      lpaStep(und, nodes, labels, coPart).unionAll(labels)
-        .groupBy("id")
-        .agg(countDistinct(col("label")).as("nl"))
-        .filter(col("nl") > 1)
-        .isEmpty
-    }
 
   /** Degree assortativity — the network-science summary of whether
     * hubs attach to hubs (r > 0) or to leaves (r < 0): the Pearson
@@ -1081,11 +1018,10 @@ object GraphAlgs {
     // largest shuffle, 70 MB at sf0.1, for a 3 MB degree side the
     // estimator refused to broadcast). Over the gate the joins stay
     // keyed — the same exact-count policy every propagation loop uses.
-    def side(df: DataFrame): DataFrame =
-      if (coPart) df.hint("merge") else broadcast(df)
-    val p = und
-      .join(side(deg.select(col("src"), col("d").as("dx"))), "src")
-      .join(side(deg.select(col("src").as("dst"), col("d").as("dy"))), "dst")
+    val p = Superstep.joinState(
+      Superstep.joinState(und, deg.select(col("src"), col("d").as("dx")),
+        "src", coPart),
+      deg.select(col("src").as("dst"), col("d").as("dy")), "dst", coPart)
     val s = p.agg(count(lit(1)).as("m"),
       sum(col("dx").cast(dec)).as("sx"),
       sum(col("dy").cast(dec)).as("sy"),
@@ -1128,54 +1064,19 @@ object GraphAlgs {
     * Scale shape: the state is one double per CONNECTED node per side,
     * gated broadcast-vs-merge like [[fixedRanks]] (a warehouse graph
     * flips to the exchange-free sort-merge path); each half-step pays
-    * one |E|-keyed fold shuffle — the honest cost — plus a 1-row scalar
-    * total broadcast. Per-round state checkpoints via the shared lazy
-    * per-round policy. Output: top-k per side, deterministic total
-    * order. */
+    * one |E|-keyed fold shuffle — the honest cost — plus the kernel's
+    * L1 total. Output: top-k per side, deterministic total order. */
   def hitsFixedTop(spark: SparkSession, dir: String, iters: Int = 5,
                    k: Int = 10): DataFrame = {
-    val coPart = stateCoPartitioned(spark, dir)
-    val e = purchaseEdges(spark, dir)
-    def foldSum(c: Column): Column =
-      aggregate(sort_array(collect_list(c)), lit(0.0), (s, x) => s + x)
-    // Each half-step materializes its raw fold ONCE (state-sized), then
-    // the L1 total is a cheap scan of the materialized frame and the
-    // normalization a lazy narrow projection over it — without this the
-    // total's agg is a second full execution of the half-step, and the
-    // lazy chains compound across rounds (measured 24 s → ~4 s).
-    // Broadcast path (r16, §2.6 fewer sync points): the checkpoint is
-    // LAZY and the total agg is the job that materializes it — one job
-    // per half-step where the eager checkpoint + broadcast-built total
-    // were two. The total crosses as the exact collected double (the
-    // same value the 1-row broadcast carried; division by the literal
-    // is the identical IEEE op), so rows are bit-identical.
-    def l1(df: DataFrame, v: String): DataFrame =
-      if (coPart) {
-        val m = graft.Layout.stateCheckpoint(df, preserveLayout = true)
-        val tot = m.agg(foldSum(col(v)).as("__t"))
-        m.crossJoin(broadcast(tot))
-          .select(m.columns.filter(c => c != v && c != "__t").map(col) :+
-            (col(v) / col("__t")).as(v): _*)
-      } else {
-        val m = df.localCheckpoint(false)
-        val t = m.agg(foldSum(col(v))).head().getDouble(0)
-        m.select(m.columns.filter(_ != v).map(col) :+
-          (col(v) / lit(t)).as(v): _*)
-      }
-    def side(df: DataFrame): DataFrame =
-      if (coPart) df.hint("merge") else broadcast(df)
-    var hubs = e.select(col("c")).distinct().withColumn("h", lit(1.0))
-    var auths: DataFrame = null
-    for (i <- 1 to iters) {
-      auths = l1(e.join(side(hubs), "c")
-        .groupBy("p").agg(foldSum(col("h")).as("a")), "a")
-      hubs = l1(e.join(side(auths), "p")
-        .groupBy("c").agg(foldSum(col("a")).as("h")), "h")
-    }
+    val loop = hitsLoop(spark, dir, stateCoPartitioned(spark, dir))
+    // The output reads both sides: the authorities after round
+    // 2·iters−1, and the hubs one round on.
+    val auths = Superstep.run(loop, 2 * iters - 1).state
+    val hubs = Superstep.run(loop.copy(init = auths), 1).state
     val aRows = auths.select(lit("authority").as("kind"),
-      col("p").cast("bigint").as("node_id"), col("a").as("score"))
+      col("p").cast("bigint").as("node_id"), col("score"))
     val hRows = hubs.select(lit("hub").as("kind"),
-      col("c").cast("bigint").as("node_id"), col("h").as("score"))
+      col("c").cast("bigint").as("node_id"), col("score"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("kind")
       .orderBy(desc("score"), asc("node_id"))
     aRows.unionAll(hRows)
@@ -1184,6 +1085,21 @@ object GraphAlgs {
       .select(col("kind"), col("node_id"), col("score"),
         col("rk").cast("bigint").as("rk"))
       .orderBy("kind", "rk")
+  }
+
+  /** HITS as a kernel loop of half-steps, each L1-normalized: odd rounds
+    * move hub scores (c, score) onto authorities (p, score), even rounds
+    * move them back. */
+  private[graft] def hitsLoop(spark: SparkSession, dir: String,
+                              coPartition: Boolean): Superstep.Loop = {
+    val e = purchaseEdges(spark, dir)
+    def half(s: DataFrame): DataFrame = {
+      val (from, to) = if (s.columns.head == "c") ("c", "p") else ("p", "c")
+      Superstep.joinState(e, s, from, coPartition)
+        .groupBy(to).agg(Superstep.foldSum(col("score")).as("score"))
+    }
+    Superstep.Loop(e.select(col("c")).distinct().withColumn("score", lit(1.0)),
+      half, coPartition, l1 = Some("score"))
   }
 
   /** DRIVER-VISIBLE bounded-error audit of the GraphX float family
@@ -1233,9 +1149,7 @@ object GraphAlgs {
                                 k: Int): DataFrame = {
     val base = ranks.select(col("id"), col(rcol).as("rank"))
     val n = ranks.count() // |V|; ranks is checkpointed → cheap
-    val total = base.agg(
-      aggregate(sort_array(collect_list(col("rank"))), lit(0.0),
-        (s, x) => s + x).as("t"))
+    val total = base.agg(Superstep.foldSum(col("rank")).as("t"))
     base.crossJoin(broadcast(total))
       .select(col("id"), (col("rank") * lit(n) / col("t")).as("rank"))
       .orderBy(desc("rank"), asc("id")).limit(k)
@@ -1370,206 +1284,110 @@ object GraphAlgs {
     * histogram, the connectedComponentSizes shape. */
   def componentsFixedSizes(spark: SparkSession, dir: String,
                            rounds: Int = ComponentsOracleRounds): DataFrame =
-    componentLabels(spark, dir, rounds)
+    componentLabels(spark, dir, rounds).state
       .groupBy("comp").agg(count(lit(1)).as("size"))
       .groupBy("size").agg(count(lit(1)).as("n_components"))
       .orderBy("size")
 
   /** The (id, comp) label frame after `rounds` min-label rounds — the
-    * loop body of [[componentsFixedSizes]], exposed so the
-    * graphx_components convergence audit ([[componentsConvergedWithin]])
-    * can check the labels themselves, not just the histogram. */
+    * loop body of [[componentsFixedSizes]], memoized so the histogram
+    * row and the graphx_components convergence audit pay one
+    * propagation between them per session. The audit checks the labels
+    * themselves, not just the histogram (`converged`: one more round
+    * changes no label — labels can move while sizes coincide): it is
+    * the precondition that binds the full-convergence GraphX result to
+    * the `rounds`-round unrolled oracle. */
   private[graft] def componentLabels(spark: SparkSession, dir: String,
-                                     rounds: Int): DataFrame =
+                                     rounds: Int): Superstep.Result =
     graft.Memo.get(spark, "component-labels", (dir, rounds)) {
-      componentLabelsLoop(spark, dir, rounds)
+      Superstep.run(componentsLoop(spark, dir,
+        stateCoPartitioned(spark, dir)), rounds)
     }
 
-  /** Memoized ([[componentLabels]]) so the histogram row and the
-    * convergence audit pay one propagation between them per session. */
-  private def componentLabelsLoop(spark: SparkSession, dir: String,
-                                  rounds: Int): DataFrame = {
-    // Static undirected edge set laid out by the fixedRanks state gate:
-    // under the |V| gate the label state broadcasts onto dst-partitioned
-    // edges and the per-dst min folds in place (zero-exchange rounds);
-    // over it the state join is an exchange-free sort-merge join against
-    // the src-sorted layout and the per-dst min is the round's one
-    // exchange. min(own ∪ nbrs) ≡ least(own, min(nbrs)) on strings
-    // (exact, no float order issues), so the formulation is invisible to
-    // the oracle hash either way.
-    val coPart = stateCoPartitioned(spark, dir)
-    val und = undirectedEdges(spark, dir, bySrc = coPart)
-    var comp = nodesById(spark, dir)
-      .select(col("id"), col("id").as("comp"))
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      r += 1
-      val state = comp.withColumnRenamed("id", "src")
-      // min(own ∪ nbrs) folded in ONE keyed aggregation over the
-      // self-augmented edge set: the self row carries the node's own
-      // label (isolated nodes surface through it), so no second
-      // reference to the previous state exists anywhere in the round —
-      // a not-yet-materialized lazy checkpoint executes exactly once.
-      // The per-row `changed` flag (new min ≠ own label) rides along so
-      // the convergence probe below is a scan of the checkpoint, not a
-      // second join against the previous state.
-      val next = graft.Layout.roundCheckpoint(
-        und
-          .join(if (coPart) state.hint("merge") else broadcast(state), "src")
-          .select(col("dst").as("id"), col("comp").as("ncomp"), col("self"))
-          .groupBy("id")
-          .agg(min("ncomp").as("comp"),
-            min(when(col("self"), col("ncomp"))).as("own"))
-          .select(col("id"), col("comp"),
-            (col("comp") =!= col("own")).as("changed")),
-        preserveLayout = coPart, round = r, last = r == rounds)
-      // Min-label is monotone: an unchanged round is a fixed point, so
-      // every remaining round is a no-op — skipping them returns exactly
-      // what the oracle's full unrolling computes. Probe every second
-      // round: under the lazy per-round checkpoint the probe's take(1)
-      // is what materializes the round's cache (the broadcast build
-      // completes it), so an every-round probe would only add a
-      // scheduling round-trip per round, not save compute; the cost of
-      // the %2 cadence is at most one no-op extra round after the true
-      // fixed point — still exactly the unrolled result.
-      if (r < rounds && (coPart || r % 2 == 0))
-        converged = next.filter(col("changed")).isEmpty
-      comp = next.select("id", "comp")
-    }
-    comp
+  /** Min-label propagation over the static undirected edge set, laid out
+    * by the state gate: under it the label state broadcasts onto
+    * dst-partitioned edges and the per-dst min folds in place
+    * (zero-exchange rounds); over it the per-dst min is the round's one
+    * exchange. min(own ∪ nbrs) ≡ least(own, min(nbrs)) on strings
+    * (exact, no float order issues), so the formulation is invisible to
+    * the oracle hash either way. */
+  private[graft] def componentsLoop(spark: SparkSession, dir: String,
+                                    coPartition: Boolean): Superstep.Loop = {
+    val und = undirectedEdges(spark, dir, bySrc = coPartition)
+    Superstep.Loop(nodesById(spark, dir).select(col("id"), col("id").as("comp")),
+      minLabelStep(und, _, coPartition), coPartition,
+      Superstep.Fixpoint.ChangedFlag)
   }
-
-  /** True iff min-label propagation reaches its LABEL-LEVEL fixed point
-    * within `rounds` rounds — the precondition that binds the
-    * full-convergence GraphX result (graphx_components) to the
-    * `rounds`-round unrolled oracle. One extra propagation round from
-    * the round-`rounds` state must change no label (histogram equality
-    * would be weaker: labels can move while sizes coincide). Memoized
-    * per (dir, rounds): the audit shares the loop's checkpointed state
-    * machinery, so repeat invocations are free. */
-  private[graft] def componentsConvergedWithin(spark: SparkSession,
-      dir: String, rounds: Int): Boolean =
-    graft.Memo.get(spark, "components-converged", (dir, rounds)) {
-      val labels = componentLabels(spark, dir, rounds)
-      val coPart = stateCoPartitioned(spark, dir)
-      val und = undirectedEdges(spark, dir, bySrc = coPart)
-      val state = labels.withColumnRenamed("id", "src")
-      // Same state-join gate as the propagation loop itself: past the
-      // broadcast gate the |V|-row label frame must NOT broadcast — the
-      // probe joins merge-wise against the src-sorted layout, exactly
-      // like rankStep/pairComponentsStep (shape pinned in PlanAuditSpec).
-      und.join(if (coPart) state.hint("merge") else broadcast(state), "src")
-        .select(col("dst").as("id"), col("comp").as("ncomp"),
-          col("self"))
-        .groupBy("id")
-        .agg(min("ncomp").as("next"),
-          min(when(col("self"), col("ncomp"))).as("own"))
-        .filter(col("next") =!= col("own"))
-        .isEmpty
-    }
 
   /** Bounded-round min-label components over an arbitrary verified pair
     * relation `(d1, d2)` — the shared clustering tail of every near-dup
     * pipeline (SRP embedding pairs, MinHash text pairs): symmetrize,
     * propagate the min label `rounds` times, one row of state per
     * member. Join strategy is the same exact-count state gate as the
-    * graph loops: under it the label state broadcasts onto the
-    * d2-partitioned pair set (zero-exchange rounds); over it the rounds
-    * run as exchange-free sort-merge joins against the d1-sorted layout
-    * — no |members| broadcast anywhere. Bounded rounds are the
-    * SEMANTICS (clusters = "within `rounds` propagation hops"), which
-    * is what keeps the oracle an exact unrolled twin. */
-  def pairComponents(pairs: DataFrame, rounds: Int): DataFrame = {
-    val spark = pairs.sparkSession
-    val n = spark.sessionState.conf.numShufflePartitions
+    * graph loops, counted over the members — no |members| broadcast
+    * past it. Bounded rounds are the SEMANTICS (clusters = "within
+    * `rounds` propagation hops"), which is what keeps the oracle an
+    * exact unrolled twin; `converged` is the convergence audit, whose
+    * DuckDB twin unrolls rounds+1 over the same pair CTEs. */
+  def pairComponents(pairs: DataFrame, rounds: Int): Superstep.Result = {
     // Materialize the (often expensive) pair plan ONCE: the und layout,
-    // the gate count, and the label init below would otherwise each
-    // re-execute the full upstream pipeline (measured 3× the pair cost).
+    // the gate count, and the label init would otherwise each re-execute
+    // the full upstream pipeline (measured 3× the pair cost).
     val p = pairs.localCheckpoint(true)
-    val undRaw = p.unionByName(
-      p.select(col("d2").as("d1"), col("d1").as("d2")))
-    val members = undRaw.select(col("d1").as("id")).distinct()
-      .localCheckpoint(true)
-    val coPart = members.count() > stateBroadcastMaxRows(spark)
-    // Marked self rows, as in undirectedEdges: they let each round fold
-    // least(own, min(nbrs)) with the label state referenced ONCE.
-    val undSelf = undRaw.withColumn("self", lit(false)).unionByName(
-      members.select(col("id").as("d1"), col("id").as("d2"),
-        lit(true).as("self")))
-    val und = graft.Layout.checkpoint(
-      if (coPart) undSelf.repartition(n, col("d1")).sortWithinPartitions("d1")
-      else undSelf.repartition(n, col("d2")))
-    var comp = members.withColumn("comp", col("id"))
-    var converged = false
-    for (r <- 1 to rounds if !converged) {
-      comp = graft.Layout.roundCheckpoint(
-        pairComponentsStep(und, comp, coPart), preserveLayout = coPart,
-        round = r, last = r == rounds)
-      // Min-label is monotone: an unchanged round is a fixed point, so
-      // every remaining round is a no-op — skipping them returns exactly
-      // the full unrolling (the componentsFixedSizes argument). Probe
-      // every second round: under the lazy per-round checkpoint the
-      // probe is what materializes the round's cache, so an every-round
-      // probe would only add a scheduling round-trip; at most one extra
-      // no-op round past the true fixed point.
-      if (coPart || r % 2 == 0 || r == rounds)
-        converged = comp.filter(col("changed")).isEmpty
-    }
-    comp.select("id", "comp")
+    val members = pairMembers(p)
+    Superstep.run(pairComponentsLoop(p, members,
+      Superstep.coPartitioned(members.count())), rounds)
   }
 
-  /** One min-label round, UNcheckpointed — split out (like [[rankStep]])
-    * so PlanAuditSpec can assert both join shapes on exactly the plan
-    * the loop executes: co-partitioned must be an exchange-light
+  /** Both orientations of a `(d1, d2)` pair relation as `(src, dst)`. */
+  private def symmetric(p: DataFrame): DataFrame =
+    p.select(col("d1").as("src"), col("d2").as("dst")).unionByName(
+      p.select(col("d2").as("src"), col("d1").as("dst")))
+
+  /** Every id on a pair, checkpointed: read by the gate count, the self
+    * rows and the label init. */
+  private[graft] def pairMembers(p: DataFrame): DataFrame =
+    symmetric(p).select(col("src").as("id")).distinct().localCheckpoint(true)
+
+  private[graft] def pairComponentsLoop(p: DataFrame, members: DataFrame,
+                                        coPartition: Boolean): Superstep.Loop = {
+    val n = p.sparkSession.sessionState.conf.numShufflePartitions
+    // Marked self rows, as in undirectedEdges: they let each round fold
+    // least(own, min(nbrs)) with the label state referenced ONCE.
+    val undSelf = symmetric(p).withColumn("self", lit(false)).unionByName(
+      members.select(col("id").as("src"), col("id").as("dst"),
+        lit(true).as("self")))
+    val und = graft.Layout.checkpoint(
+      if (coPartition)
+        undSelf.repartition(n, col("src")).sortWithinPartitions("src")
+      else undSelf.repartition(n, col("dst")))
+    Superstep.Loop(members.withColumn("comp", col("id")),
+      minLabelStep(und, _, coPartition), coPartition,
+      Superstep.Fixpoint.ChangedFlag)
+  }
+
+  /** One min-label round — the step of both [[componentsLoop]] and
+    * [[pairComponentsLoop]], also called directly by PlanAuditSpec to
+    * assert both join shapes: co-partitioned must be an exchange-light
     * sort-merge state join, gated must broadcast the label state.
-    * `und` carries the marked self rows ([[pairComponents]]), so
-    * min(own ∪ nbrs) folds in ONE keyed aggregation — per-d2 in-place
-    * under the gate, the round's one pair-relation-sized exchange over
-    * it — and the label state is referenced exactly once (a second
-    * reference would execute a not-yet-materialized lazy checkpoint
-    * twice). The per-row `changed` flag (new min ≠ the self
-    * row's own label) rides along so the convergence probe is a scan of
+    * `und` carries the marked self rows, so min(own ∪ nbrs) folds in
+    * ONE keyed aggregation — per-dst in-place under the gate, the
+    * round's one edge-sized exchange over it — and the label state is
+    * referenced exactly once (a second reference would execute a
+    * not-yet-materialized lazy checkpoint twice). Isolated nodes surface
+    * through their self row. The per-row `changed` flag (new min ≠ the
+    * self row's own label) is the kernel's fixed-point probe: a scan of
     * the round's checkpoint, not a second join against the state. */
-  private[graft] def pairComponentsStep(und: DataFrame, comp: DataFrame,
-                                        coPartition: Boolean): DataFrame = {
-    val state = comp.withColumnRenamed("id", "d1")
-    und
-      .join(if (coPartition) state.hint("merge") else broadcast(state), "d1")
-      .select(col("d2").as("id"), col("comp").as("ncomp"), col("self"))
+  private[graft] def minLabelStep(und: DataFrame, comp: DataFrame,
+                                  coPartition: Boolean): DataFrame =
+    Superstep.joinState(und, comp.withColumnRenamed("id", "src"), "src",
+        coPartition)
+      .select(col("dst").as("id"), col("comp").as("ncomp"), col("self"))
       .groupBy("id")
       .agg(min("ncomp").as("comp"),
         min(when(col("self"), col("ncomp"))).as("own"))
       .select(col("id"), col("comp"),
         (col("comp") =!= col("own")).as("changed"))
-  }
-
-  /** True iff bounded-round min-label propagation over `pairs` reaches
-    * its LABEL-LEVEL fixed point at `labels` (the memoized round-N
-    * state of [[pairComponents]] over the same pair relation): one more
-    * [[pairComponentsStep]] must change no label. The in-loop probe is
-    * only sufficient ("round N was a no-op"), not necessary — the last
-    * round may settle everything — so the audit re-runs one genuine
-    * step. Same exact-count state gate as the loop (the |members| label
-    * frame must never broadcast past it — the componentsConvergedWithin
-    * lesson). Memoized per caller-supplied key; the DuckDB twin unrolls
-    * rounds+1 over the same pair CTEs, so the boolean is oracle-checked
-    * rather than assumed by either engine. */
-  private[graft] def pairComponentsConvergedWithin(
-      spark: SparkSession, cacheKey: Any, pairs: DataFrame,
-      labels: DataFrame): Boolean =
-    graft.Memo.get(spark, "pair-comp-converged", cacheKey) {
-      val p = pairs.localCheckpoint(true)
-      val undRaw = p.unionByName(
-        p.select(col("d2").as("d1"), col("d1").as("d2")))
-      val members = labels.select(col("id"))
-      val undSelf = undRaw.withColumn("self", lit(false)).unionByName(
-        members.select(col("id").as("d1"), col("id").as("d2"),
-          lit(true).as("self")))
-      val coPart = members.count() > stateBroadcastMaxRows(spark)
-      pairComponentsStep(undSelf, labels, coPart)
-        .filter(col("changed")).isEmpty
-    }
 
   /** Harmonic centrality toward a landmark set: h(v) = Σ_s 1/d(v,s)
     * over the landmarks v reaches (d > 0) — the centrality that stays

@@ -42,15 +42,15 @@ object GraphRegistry {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val probes = Seq[(String, Long, () => Boolean)](
       ("components", GraphAlgs.ComponentsOracleRounds.toLong,
-        () => GraphAlgs.componentsConvergedWithin(s, d,
-          GraphAlgs.ComponentsOracleRounds)),
+        () => GraphAlgs.componentLabels(s, d,
+          GraphAlgs.ComponentsOracleRounds).converged),
       ("dedup_minhash", graft.dedup.Dedup.ClusterRounds.toLong,
         () => graft.dedup.Dedup.minhashConvergedWithin(s, d)),
       ("graph_kcore", GraphAlgs.KCoreRounds.toLong,
-        () => GraphAlgs.kCoreConvergedWithin(s, d, GraphAlgs.KCoreK,
-          GraphAlgs.KCoreRounds)),
+        () => GraphAlgs.kCoreAlive(s, d, GraphAlgs.KCoreK,
+          GraphAlgs.KCoreRounds).converged),
       ("graph_lpa", GraphAlgs.LpaRounds.toLong,
-        () => GraphAlgs.lpaConvergedWithin(s, d, GraphAlgs.LpaRounds)),
+        () => GraphAlgs.lpaLabels(s, d, GraphAlgs.LpaRounds).converged),
       ("sim_dup", graft.similarity.Similarity.ClusterRounds.toLong,
         () => graft.similarity.Similarity.dupConvergedWithin(s, d)))
     try {
@@ -565,7 +565,7 @@ object GraphRegistry {
       // point), so the same exact integer size histogram binds both —
       // component membership has no float tier, unlike the rank family.
       // The horizon equivalence is data-dependent, so the Scala query
-      // ASSERTS it (GraphAlgs.componentsConvergedWithin) — a graph
+      // ASSERTS it (GraphAlgs.componentLabels(…).converged) — a graph
       // needing more rounds fails with the horizon named instead of an
       // unexplained hash mismatch.
       "graphx_components" -> componentsSql(GraphAlgs.ComponentsOracleRounds),

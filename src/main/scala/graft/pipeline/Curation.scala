@@ -74,7 +74,7 @@ object Curation {
     * the doc key (same-key hash join); everything upstream is the
     * banded LSH candidate path that never goes quadratic. */
   def safeSplits(spark: SparkSession, dir: String): DataFrame = {
-    val comp = graft.dedup.Dedup.minhashComponents(spark, dir)
+    val comp = graft.dedup.Dedup.minhashComponents(spark, dir).state
       .withColumnRenamed("id", "doc_id")
     Tables.load(spark, dir, "documents").select(col("doc_id"))
       .join(comp, Seq("doc_id"), "left")
@@ -400,7 +400,7 @@ object Curation {
     // released-ids table a pipeline materializes once per release.
     graft.Memo.get(spark, "curate-full", (dir, minQuality)) {
       val nearDupDrop = graft.similarity.Similarity.dupAssignments(spark, dir)
-        .filter(col("id") =!= col("comp"))
+        .state.filter(col("id") =!= col("comp"))
         .select(col("id").as("doc_id"))
       val contaminated = TextAnalysis.contamination(spark, dir)
         .filter(col("is_contaminated"))

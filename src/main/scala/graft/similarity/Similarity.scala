@@ -300,10 +300,11 @@ object Similarity {
     * comp ≠ id are the redundant copies a dedup pass removes). The
     * propagation is the generic bounded-round [[graft.graph.GraphAlgs
     * .pairComponents]] (exact-count state gate, monotone early exit),
-    * memoized per (session, dir, threshold, rounds). */
+    * memoized per (session, dir, threshold, rounds): its `state` is the
+    * assignment, its `converged` the convergence audit's answer. */
   def dupAssignments(spark: SparkSession, dir: String,
-                     threshold: Double = 0.4,
-                     rounds: Int = ClusterRounds): DataFrame =
+      threshold: Double = 0.4,
+      rounds: Int = ClusterRounds): graft.graph.Superstep.Result =
     graft.Memo.get(spark, "srp-dup-assign", (dir, threshold, rounds)) {
       graft.graph.GraphAlgs.pairComponents(
         srpLshPairsCore(spark, dir, threshold).select("d1", "d2"), rounds)
@@ -319,10 +320,7 @@ object Similarity {
     * DuckDB twin unrolls rounds+1 over the same verified-pair CTEs. */
   private[graft] def dupConvergedWithin(spark: SparkSession, dir: String,
       threshold: Double = 0.4, rounds: Int = ClusterRounds): Boolean =
-    graft.graph.GraphAlgs.pairComponentsConvergedWithin(spark,
-      ("srp", dir, threshold, rounds),
-      srpLshPairsCore(spark, dir, threshold).select("d1", "d2"),
-      dupAssignments(spark, dir, threshold, rounds))
+    dupAssignments(spark, dir, threshold, rounds).converged
 
   def dupClusters(spark: SparkSession, dir: String,
                   threshold: Double = 0.4,
@@ -331,7 +329,7 @@ object Similarity {
     // singleton label can only appear via bounded rounds on a long chain;
     // filter it — singletons aren't duplicates (and the oracle twin
     // filters identically).
-    dupAssignments(spark, dir, threshold, rounds)
+    dupAssignments(spark, dir, threshold, rounds).state
       .groupBy("comp").agg(count(lit(1)).as("n_members"))
       .filter(col("n_members") > 1)
       .select(col("comp").as("keep_vec_id"), col("n_members"))

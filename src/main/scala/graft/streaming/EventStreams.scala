@@ -1160,7 +1160,7 @@ object EventStreams {
       .select(concat(lit("U"), col("user_id").cast("string")).as("d1"),
         concat(lit("P"), col("product_id").cast("string")).as("d2"))
       .distinct()
-    graft.graph.GraphAlgs.pairComponents(pairs, rounds)
+    graft.graph.GraphAlgs.pairComponents(pairs, rounds).state
       .groupBy("comp").agg(count(lit(1)).as("size"))
       .groupBy("size").agg(count(lit(1)).as("n_components"))
       .orderBy("size")

@@ -213,7 +213,7 @@ class CurationSpec extends SparkTestBase {
     assert(full.subsetOf(base))
     // exactly the two extra gates explain the difference
     val ndMembers = graft.similarity.Similarity.dupAssignments(spark, dir)
-      .filter(col("id") =!= col("comp")).collect()
+      .state.filter(col("id") =!= col("comp")).collect()
       .map(_.getLong(0)).toSet
     val dirty = graft.text.TextAnalysis.contamination(spark, dir)
       .filter(col("is_contaminated")).collect()

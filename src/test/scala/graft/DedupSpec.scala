@@ -181,7 +181,7 @@ class DedupSpec extends SparkTestBase {
   test("quality keepers: argmax quality per cluster, overturns tracked") {
     import org.apache.spark.sql.functions.col
     val clusters = graph.GraphAlgs.pairComponents(
-      Dedup.minhashLshPairs(spark, dir).select("d1", "d2"), 5)
+      Dedup.minhashLshPairs(spark, dir).select("d1", "d2"), 5).state
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     val q6 = pipeline.Curation.qualityMicro(spark, dir)
       .select("doc_id", "q6").collect()
@@ -215,7 +215,7 @@ class DedupSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1)))
     val comp = graft.graph.GraphAlgs
       .pairComponents(Dedup.minhashLshPairs(spark, dir)
-        .select("d1", "d2"), rounds = 5)
+        .select("d1", "d2"), rounds = 5).state
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // Directly-paired docs always share a component (one hop ≤ rounds),
     // and every label is the min of the docs it covers.

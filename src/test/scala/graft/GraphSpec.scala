@@ -228,6 +228,19 @@ class GraphSpec extends SparkTestBase {
     assert(gotAuth.map(_._2) == gotAuth.map(_._2).sortBy(-_))
   }
 
+  test("HITS over an empty purchase relation returns no rows") {
+    // Every table of sf0.001 but orders, which is empty: no purchase
+    // edges, so both score states are empty and their L1 totals null.
+    val sf = "/root/testdata/sf0.001"
+    val dir = java.nio.file.Files.createTempDirectory("graft-no-orders")
+    for (t <- Tables.names if t != "orders")
+      java.nio.file.Files.createSymbolicLink(dir.resolve(s"$t.parquet"),
+        java.nio.file.Paths.get(s"$sf/$t.parquet"))
+    Tables.load(spark, sf, "orders").limit(0)
+      .write.parquet(s"$dir/orders.parquet")
+    assert(GraphAlgs.hitsFixedTop(spark, dir.toString).isEmpty)
+  }
+
   test("LPA matches a literal driver-side vote iteration at sf0.001") {
     val sf = "/root/testdata/sf0.001"
     import spark.implicits._

@@ -164,21 +164,21 @@ class PlanAuditSpec extends SparkTestBase {
     // The near-dup clustering tail (shared by the MinHash and SRP
     // pipelines) must survive a member set over the state gate: audit
     // the exact round plan with coPartition = true — sort-merge state
-    // join against the d1-sorted pair layout, no BroadcastExchange.
+    // join against the src-sorted pair layout, no BroadcastExchange.
     import org.apache.spark.sql.functions.lit
     val n = spark.sessionState.conf.numShufflePartitions
     val pairs = graft.dedup.Dedup.minhashLshPairs(spark, dir)
       .select("d1", "d2").localCheckpoint(true)
-    val undRaw = pairs.unionByName(
-      pairs.select(col("d2").as("d1"), col("d1").as("d2")))
-    val members = undRaw.select(col("d1").as("id")).distinct()
+    val undRaw = pairs.select(col("d1").as("src"), col("d2").as("dst"))
+      .unionByName(pairs.select(col("d2").as("src"), col("d1").as("dst")))
+    val members = undRaw.select(col("src").as("id")).distinct()
     val und = Layout.checkpoint(
       undRaw.withColumn("self", lit(false))
-        .unionByName(members.select(col("id").as("d1"), col("id").as("d2"),
+        .unionByName(members.select(col("id").as("src"), col("id").as("dst"),
           lit(true).as("self")))
-        .repartition(n, col("d1")).sortWithinPartitions("d1"))
+        .repartition(n, col("src")).sortWithinPartitions("src"))
     val comp = members.withColumn("comp", col("id"))
-    val step = graph.GraphAlgs.pairComponentsStep(und, comp,
+    val step = graph.GraphAlgs.minLabelStep(und, comp,
       coPartition = true)
     val plan = step.queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"),
