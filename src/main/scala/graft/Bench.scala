@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
 
@@ -103,13 +102,7 @@ object Bench {
     // so scale-stress runs can raise it without re-shaping the bench.
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(s"local[$cpus]", shufflePartitions)
     // Optional subset (comma-separated names): targeted A/B runs on a
     // family of queries without paying the full suite. Unset → all.
     // Parsed BEFORE the prewarm tier so a targeted run only warms the

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Repeat-timer for individual registry queries: prints per-rep seconds,
   * so one-time memoized costs (GraphX view, IVF index) separate from
@@ -12,13 +11,7 @@ object MicroBench {
     val reps = args(1).toInt
     val names = args.drop(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(s"local[$cpus]", cpus)
     spark.range(1000000L).selectExpr("sum(id)").collect()
     for (name <- names; r <- 1 to reps) {
       val t0 = System.nanoTime()

@@ -15,13 +15,7 @@ object PlanAudit {
       else Seq("point_lookup", "rec_cooccurrence", "topk_orders",
         "q1_pricing_summary", "rec_customer", "dedup_ngram_jaccard",
         "scan_project")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("local[8]", "8", logLevel = "ERROR")
     if (args.contains("--sweep")) sweep(spark, sfDir)
     else names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,6 +1,8 @@
 package graft
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.LongAdder
 import org.apache.spark.sql.SparkSession
 
 /** The reference's demo front door (reference `app/main.py:11-135`, a
@@ -23,7 +25,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Same wire shapes, same fallback cascade (co-occurrence → same-category,
   * reference `app/main.py:61,70-71`), same graceful degradation (any
-  * engine error → 200 with empty items, `app/main.py:124-126`). The
+  * engine error → 200 with empty items, `app/main.py:124-126`) — but
+  * each degradation is logged to stderr with its endpoint, arm and
+  * exception class and counted by exception class ([[degradations]]),
+  * so a broken engine is told apart from a seed with no signal. The
   * serving path is the engine's top-k plans — the ONLY driver-side
   * materialization is the k-row collect behind the limit
   * (operators/Json.toItemsJson). This is a demo shim, deliberately thin:
@@ -32,6 +37,21 @@ import org.apache.spark.sql.SparkSession
   */
 object Serve {
 
+  private val degradedCounts = new ConcurrentHashMap[String, LongAdder]()
+
+  /** Degraded answers since JVM start, by exception class name. */
+  def degradations: Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    degradedCounts.asScala.map { case (k, v) => k -> v.sum() }.toMap
+  }
+
+  private def degrade(endpoint: String, arm: String, e: Throwable): Unit = {
+    val cls = e.getClass.getName
+    degradedCounts.computeIfAbsent(cls, _ => new LongAdder).increment()
+    System.err.println(s"[graft-serve] degraded $endpoint arm=$arm: $cls: " +
+      e.getMessage)
+  }
+
   /** Start the service; port 0 binds an ephemeral port (tests). */
   def start(spark: SparkSession, dir: String, port: Int): HttpServer = {
     val server = HttpServer.create(new java.net.InetSocketAddress(port), 0)
@@ -39,12 +59,12 @@ object Serve {
     // `ok` field (the reference's /health contract), so a failing probe
     // must answer {"ok": false} — an items-shaped body would read as
     // unparseable-but-200 to it.
-    server.createContext("/health", handler("""{"ok": false}""") { _ =>
+    server.createContext("/health", handler("/health", """{"ok": false}""") { _ =>
       // An actual engine liveness probe (SELECT 1), not a constant.
       val ok = Tables.healthProbe(spark).count() == 1L
       s"""{"ok": ${ok}}"""
     })
-    server.createContext("/etl", handler("""{"ok": false}""") { _ =>
+    server.createContext("/etl", handler("/etl", """{"ok": false}""") { _ =>
       // The reference's /etl rebuilds the graph synchronously
       // (app/main.py:17-19); here that is materializing the node and
       // edge relations the recs queries serve from.
@@ -53,7 +73,7 @@ object Serve {
       s"""{"ok": ${n > 0 && e > 0}}"""
     })
     server.createContext("/recs",
-        handler("""{"items": [], "took_ms": 0}""") { ex =>
+        handler("/recs", """{"items": [], "took_ms": 0}""") { ex =>
       val started = System.nanoTime()
       val params = queryParams(ex)
       val items =
@@ -99,7 +119,10 @@ object Serve {
                 operators.Recs.recsForCustomer(spark, dir, cid))
             }
           }.getOrElse("[]") // neither provided → empty list (main.py:123)
-        } catch { case scala.util.control.NonFatal(_) => "[]" }
+        } catch { case scala.util.control.NonFatal(e) =>
+          degrade("/recs", params.getOrElse("arm", "default"), e)
+          "[]"
+        }
       val tookMs = (System.nanoTime() - started) / 1000000L
       s"""{"items": $items, "took_ms": $tookMs}"""
     })
@@ -111,7 +134,7 @@ object Serve {
     server
   }
 
-  private def handler(degraded: String)(
+  private def handler(endpoint: String, degraded: String)(
       body: HttpExchange => String): HttpHandler =
     (ex: HttpExchange) => {
       val (status, payload) =
@@ -120,7 +143,9 @@ object Serve {
           // Degrade like the reference: a broken engine yields an empty,
           // well-formed response IN THIS ENDPOINT'S SHAPE, never a 500
           // stack trace (app/main.py:124-126).
-          case scala.util.control.NonFatal(_) => (200, degraded)
+          case scala.util.control.NonFatal(e) =>
+            degrade(endpoint, "-", e)
+            (200, degraded)
         }
       val bytes = payload.getBytes("UTF-8")
       ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -141,13 +166,7 @@ object Serve {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = args.lift(1).flatMap(_.toIntOption).getOrElse(8080)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_MASTER", "local[4]"), "32")
     val server = start(spark, dir, port)
     println(s"graft serving $dir on port " +
       s"${server.getAddress.getPort} (/health /etl /recs)")

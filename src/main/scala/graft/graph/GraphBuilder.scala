@@ -61,30 +61,25 @@ object GraphBuilder {
     * doesn't define the property), per the reference's SET clauses:
     *  - Order.ts          ← o_orderdate   (etl.py:227 `SET o.ts = row.ts`)
     *  - Product.category_id ← p_brand     (etl.py:188-189)
-    *  - Customer.join_date (etl.py:215-216) — the TPC-H-shaped testdata
-    *    has no stand-in column (FIXTURES.md §1), so it is carried when a
-    *    `c_join_date` column exists (the seed fixture's 02_seed.sql dates)
-    *    and null otherwise — same error-tolerant-extract posture as S2. */
+    *  - Customer.join_date (etl.py:215-216) ← c_join_date, declared on
+    *    the customer table: the seed fixture carries 02_seed.sql's dates,
+    *    the TPC-H-shaped testdata has no stand-in column (FIXTURES.md §1)
+    *    and reads null — same error-tolerant-extract posture as S2. */
   private[graph] def buildNodes(spark: SparkSession, dir: String): DataFrame = {
     val nullTs = lit(null).cast("timestamp")
     val nullStr = lit(null).cast("string")
     val nullDate = lit(null).cast("date")
-    val custRaw = Tables.load(spark, dir, "customer")
-    val joinDate =
-      if (custRaw.columns.contains("c_join_date"))
-        col("c_join_date").cast("date")
-      else nullDate
-    val customer = custRaw
+    val customer = Tables.load(spark, dir, "customer")
       .select(S("C", col("c_custkey")).as("id"), lit("Customer").as("label"),
         col("c_name").as("name"), nullTs.as("ts"), nullStr.as("category_id"),
-        joinDate.as("join_date"))
+        col("c_join_date").as("join_date"))
     val product = Tables.load(spark, dir, "part")
       .select(S("P", col("p_partkey")).as("id"), lit("Product").as("label"),
         col("p_name").as("name"), nullTs.as("ts"),
         col("p_brand").as("category_id"), nullDate.as("join_date"))
     val order = Tables.load(spark, dir, "orders")
       .select(S("O", col("o_orderkey")).as("id"), lit("Order").as("label"),
-        nullStr.as("name"), col("o_orderdate").cast("timestamp").as("ts"),
+        nullStr.as("name"), col("o_orderdate").as("ts"),
         nullStr.as("category_id"), nullDate.as("join_date"))
     val category = Tables.load(spark, dir, "part")
       .select(col("p_brand")).distinct()

@@ -448,8 +448,8 @@ object GraphRegistry {
     * so the oracle adapts exactly where the Spark query does. */
   def adaptiveOracles(spark: org.apache.spark.sql.SparkSession,
                       dir: String): Map[String, String] = {
-    val hasJoinDate = graft.Tables.load(spark, dir, "customer")
-      .columns.contains("c_join_date")
+    val hasJoinDate =
+      graft.Tables.fileColumns(spark, dir, "customer").contains("c_join_date")
     Map("graph_node_props" -> nodePropsSql(hasJoinDate))
   }
 

@@ -26,10 +26,8 @@ object AsofJoin {
 
   def eventsToLastOrder(spark: SparkSession, dir: String): DataFrame = {
     val ord = Tables.load(spark, dir, "orders")
-      // o_orderdate is TIMESTAMP_NTZ in the testdata; session TZ is pinned
-      // UTC so the cast is identity and unix_micros matches DuckDB epoch_ns.
       .groupBy(col("o_custkey").as("user_id"),
-        unix_micros(col("o_orderdate").cast("timestamp")).as("ts_us"))
+        unix_micros(col("o_orderdate")).as("ts_us"))
       .agg(max("o_orderkey").as("order_id"))
       .select(col("user_id"), col("ts_us"), lit(0).as("tag"),
         lit(null).cast("long").as("event_id"), col("order_id"))

@@ -22,7 +22,7 @@ object RangeJoin {
     val wUs = windowHours.toLong * 3600L * 1000000L
     val ord = Tables.load(spark, dir, "orders")
       .select(col("o_custkey").as("user_id"), col("o_orderkey"),
-        unix_micros(col("o_orderdate").cast("timestamp")).as("ots"))
+        unix_micros(col("o_orderdate")).as("ots"))
       .withColumn("bucket", floor(col("ots") / wUs))
     val ev = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("user_id"),

@@ -343,12 +343,13 @@ object Relational {
     // so each pool thread tags its own jobs): pool.shutdown() alone
     // would leave in-flight job chains running detached on an Await
     // timeout or a fast-failing sibling, competing with whatever query
-    // runs next (r15 advice #3).
-    val jobGroup = "sketch-audit"
+    // runs next (r15 advice #3). The id is per call, so cancelling one
+    // audit never kills a concurrent audit's jobs.
+    val jobGroup = s"sketch-audit-${java.util.UUID.randomUUID}"
     def grouped[T](body: => T): Future[T] = Future {
       spark.sparkContext.setJobGroup(jobGroup, "sketch_audit family",
         interruptOnCancel = true)
-      body
+      try body finally spark.sparkContext.clearJobGroup()
     }
     try {
       val hllF = grouped {
@@ -521,9 +522,7 @@ object Relational {
     val ord = Tables.load(spark, dir, "orders")
       .filter(col("o_orderdate") < cut)
       .select(col("o_orderkey"), col("o_custkey"),
-        // o_orderdate is TIMESTAMP_NTZ; session TZ is pinned UTC so the
-        // cast is value-preserving (same convention as AsofJoin).
-        unix_micros(col("o_orderdate").cast("timestamp")).as("order_date_us"),
+        unix_micros(col("o_orderdate")).as("order_date_us"),
         col("o_orderpriority"))
     val li = Tables.load(spark, dir, "lineitem")
       .filter(col("l_shipdate") > cut)

@@ -915,21 +915,21 @@ object Similarity {
     // same 0.0 seed — only the container changed (per-dim columns →
     // positions of one array), so the oracle twin stays byte-identical.
     // Per-dim extract + sorted fold over a collected list-of-arrays, as
-    // one array-valued expression. Stricter failure mode than the old
-    // per-dim collect_list (r15 advice #2): collect_list silently
-    // dropped null ELEMENTS, so a malformed/short embedding excluded
-    // only itself; element_at past an array's end yields null and a
-    // null poisons its chunk's fold (the whole result goes NaN/null —
-    // loudly wrong, not quietly wrong). Acceptable because the
-    // embeddings fixture is 64-dim non-null by construction (emb()
-    // materializes fixed-width arrays); a lossy-input corpus would
-    // need a size(e)=64 AND !array_contains-null gate before the loop.
+    // one array-valued expression. A null-holding embedding would poison
+    // the folds into a quietly NaN/null answer (a short one fails on an
+    // array index instead), so such rows (`bad`) skip the dot product
+    // and the folds, each round's aggregates count them, and the root
+    // fold raises when any exist — the check rides the aggregates that
+    // already run, no extra job.
     def perDimFolds(lst: Column): Column =
       transform(sequence(lit(1), lit(dim)), d =>
         aggregate(sort_array(transform(lst, a => element_at(a, d))),
           lit(0.0), (s, x) => s + x))
+    val wellFormed = coalesce(size(col("embedding")) === dim &&
+      !exists(col("embedding"), _.isNull), lit(false))
     val e = emb(spark, dir).select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("e"))
+      transform(col("embedding"), x => x.cast("double")).as("e"),
+      when(wellFormed, 0L).otherwise(1L).as("bad"))
     // v rides as ONE array column; the row-wise dot product keeps the
     // explicit left-assoc reduce (same chain as before, ±0.0-exact).
     var v: DataFrame = spark.range(1).select(
@@ -939,13 +939,18 @@ object Similarity {
       val s = (0 until dim).map(d =>
         element_at(col("e"), d + 1) * element_at(col("v"), d + 1))
         .reduce(_ + _)
-      val scored = e.crossJoin(broadcast(v)).withColumn("s", s)
-        .select(col("vec_id"), transform(col("e"), x => x * col("s")).as("xs"))
+      val ok = col("bad") === 0L
+      val scored = e.crossJoin(broadcast(v)).withColumn("s", when(ok, s))
+        .select(col("vec_id"),
+          when(ok, transform(col("e"), x => x * col("s"))).as("xs"), col("bad"))
       val lvl = scored.groupBy(shiftright(col("vec_id"), 10).as("chunk"))
-        .agg(collect_list(col("xs")).as("lst"))
-        .select(perDimFolds(col("lst")).as("u"))
-      val u = lvl.agg(collect_list(col("u")).as("lst"))
-        .select(perDimFolds(col("lst")).as("u"))
+        .agg(collect_list(col("xs")).as("lst"), sum(col("bad")).as("bad"))
+        .select(perDimFolds(col("lst")).as("u"), col("bad"))
+      val u = lvl.agg(collect_list(col("u")).as("lst"), sum(col("bad")).as("bad"))
+        .select(when(col("bad") > 0, raise_error(concat(
+            lit("powerIteration: "), col("bad").cast("string"),
+            lit(s" embeddings are not $dim non-null floats"))))
+          .otherwise(perDimFolds(col("lst"))).as("u"))
       val nrm = sqrt((0 until dim).map(d =>
         element_at(col("u"), d + 1) * element_at(col("u"), d + 1))
         .reduce(_ + _))

@@ -97,10 +97,7 @@ object ZOrderLayout {
         s" + ((($by) // ${1L << i}) % 2) * ${1L << (2 * i)}"
     }.mkString(" + ")
 
-  // o_orderdate is TIMESTAMP_NTZ; session TZ is pinned UTC so the cast to
-  // instant is value-preserving (the Relational.scala:494 precedent).
-  private def zdayExpr =
-    s"unix_micros(cast(o_orderdate as timestamp)) div $DayUs"
+  private def zdayExpr = s"unix_micros(o_orderdate) div $DayUs"
 
   /** The z-clustered layout + its bounds, built once per (JVM, dir):
     * one bounds agg (a bounded 1-row collect), one clustered write

@@ -32,8 +32,8 @@ object EventStreams {
     * repeating that. This listener surfaces every stateOperator's
     * `numRowsDroppedByWatermark` from query progress: a nonzero batch
     * logs a WARN naming the query and the running total, and
-    * [[watermarkDropped]] exposes the counter so ingest paths (builtStore,
-    * StoreScaleProbe) can assert zero instead of trusting input order.
+    * [[watermarkDropped]] exposes the counter so ingest paths (builtStore)
+    * can assert zero instead of trusting input order.
     * Per-query totals are kept after termination (bounded by queries
     * started per JVM — a handful); the terminated-id set is what lets
     * readers wait out the async listener bus. */
@@ -100,18 +100,9 @@ object EventStreams {
   /** File-replay streaming source over a testdata dir — how the driver
     * parquet becomes a stream (one file per microbatch). */
   def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Mirror Tables.load: un-annotated micros surface as instant
-    // TIMESTAMP at the scan (UTC session — value-identical), so the
-    // stream schema matches the batch twin's and normalizeTs only acts
-    // on the NANOS→long encoding.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    // Schema must match the physical file (ts = INT64 nanos); the
-    // micros conversion happens on the stream, as in Tables.load.
-    val raw = spark.read.parquet(s"$dir/events.parquet")
     // The testdata table is a single file; the streaming file source wants
     // a directory → stream the dir with a glob pinned to the events table.
-    val stream = spark.readStream.schema(raw.schema)
+    val stream = spark.readStream.schema(Tables.schema(spark, dir, "events"))
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
@@ -964,10 +955,10 @@ object EventStreams {
     * measured on the sf0.1 slice, a round-robin 8-file spool kept only
     * 24,604 of 93,647 true edges (74% dropped). Backfills
     * of unordered history must either slice input by time range
-    * ([[graft.StoreScaleProbe]] shows the repartitionByRange spool) or
+    * (a `repartitionByRange` spool on the event time) or
     * use the batch path (`mergeEdgeBatch` directly), which has no
     * watermark. With in-order delivery, store content equals the batch
-    * dedup exactly (asserted in StreamingSpec and by the probe). */
+    * dedup exactly (asserted in StreamingSpec). */
   def maintainEdgeStore(events: DataFrame, storeDir: String,
                         checkpointDir: Option[String] = None,
                         availableNow: Boolean = false)
@@ -978,7 +969,7 @@ object EventStreams {
     requireClaimCapableFs(new Path(storeDir))
     // Out-of-order input must fail LOUDLY, not by scaladoc: the monitor
     // WARNs on any watermark-dropped batch and backs [[watermarkDropped]]
-    // for callers that assert zero (builtStore, StoreScaleProbe).
+    // for callers that assert zero (builtStore).
     ensureDropMonitor(events.sparkSession)
     var w = dedupedBehavioralEdges(events).writeStream
       .outputMode("append")

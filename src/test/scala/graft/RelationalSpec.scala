@@ -343,4 +343,51 @@ class RelationalSpec extends SparkTestBase {
       assert(d == math.abs(e.toDouble / ne - l.toDouble / nl))
     }
   }
+
+  test("concurrent sketch audits run under disjoint job groups") {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val caller = "graft.test.caller"
+    // (caller, job group) of every job a tagged thread (or a pool thread
+    // it spawned, which inherits its local properties) starts.
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(caller)))
+          .foreach { c =>
+            seen.add(c -> String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+            ()
+          }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val results = new java.util.concurrent.ConcurrentHashMap[String, Seq[Boolean]]()
+      val threads = Seq("a", "b").map { c =>
+        new Thread(() => {
+          sc.setLocalProperty(caller, c)
+          results.put(c, Relational.sketchAudit(spark, dir).collect()
+            .map(_.getBoolean(1)).toSeq)
+          ()
+        })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      assert(results.asScala == Map("a" -> Seq(true, true, true),
+        "b" -> Seq(true, true, true)))
+      // The listener bus is FIFO: once a marker job's start is seen,
+      // every earlier job start has been delivered.
+      sc.setLocalProperty(caller, "marker")
+      try spark.range(1).count() finally sc.setLocalProperty(caller, null)
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!seen.asScala.exists(_._1 == "marker") &&
+             System.currentTimeMillis() < deadline) Thread.sleep(10)
+      def groups(c: String) = seen.asScala.collect {
+        case (`c`, g) if g.startsWith("sketch-audit") => g
+      }.toSet
+      assert(groups("a").nonEmpty && groups("b").nonEmpty)
+      assert(groups("a").intersect(groups("b")).isEmpty,
+        s"shared job groups: ${groups("a")} vs ${groups("b")}")
+    } finally sc.removeSparkListener(listener)
+  }
 }

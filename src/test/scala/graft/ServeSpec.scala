@@ -157,4 +157,17 @@ class ServeSpec extends SparkTestBase {
         recs.contains(""""took_ms":"""))
     } finally server.stop(0)
   }
+
+  test("a missing table directory answers 200 with empty items and counts the exception class") {
+    val missing = java.nio.file.Files.createTempDirectory("graft-no-tables").toString
+    val cls = classOf[org.apache.spark.sql.AnalysisException].getName
+    val before = Serve.degradations.getOrElse(cls, 0L)
+    val server = Serve.start(spark, missing, port = 0)
+    try {
+      val got = get(server.getAddress.getPort, "/recs?product_id=1")
+      assert(got.startsWith("""{"items": [], "took_ms":"""), got)
+      assert(Serve.degradations.getOrElse(cls, 0L) == before + 1,
+        Serve.degradations.toString)
+    } finally server.stop(0)
+  }
 }

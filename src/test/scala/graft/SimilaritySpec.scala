@@ -418,4 +418,21 @@ class SimilaritySpec extends SparkTestBase {
       assert(rec == n.toDouble / k)
     }
   }
+
+  test("powerIteration fails loudly on an embedding that is not 64 non-null floats") {
+    import spark.implicits._
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x =>
+        Option(x.getMessage).toSeq ++ messages(x.getCause))
+    val good = Seq.fill(64)(Option(0.125f))
+    // One short embedding, then one holding a null element.
+    for (bad <- Seq(good.tail, good.tail :+ None)) {
+      val d = java.nio.file.Files.createTempDirectory("graft-bad-emb").toString
+      Seq((1L, good, 0), (2L, bad, 1)).toDF("vec_id", "embedding", "label")
+        .write.parquet(s"$d/embeddings.parquet")
+      val e = intercept[Exception](Similarity.powerIteration(spark, d).collect())
+      assert(messages(e).exists(
+        _.contains("1 embeddings are not 64 non-null floats")), e.toString)
+    }
+  }
 }

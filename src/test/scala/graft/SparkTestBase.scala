@@ -6,17 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One SparkSession per test JVM (suites share it — Spark startup is the
   * dominant test cost). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local("local[4]", "4")
 }
 
 trait SparkTestBase extends AnyFunSuite {
